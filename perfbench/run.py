@@ -6,7 +6,8 @@ Run from the repository root. One run generates its inputs from the
 seed, sets the workload up three times (each set-up starts a fresh
 Spark session, ``local[<cores>]``) and reports the median as ``setup_s``,
 warms up, then runs operations in a closed loop until ``--seconds`` have
-passed (finishing the one in flight), checks every operation's outputs,
+passed (finishing the one in flight) and the workload's minimum count of
+operations is done, checks every operation's outputs,
 and prints one JSON line last:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
@@ -63,6 +64,13 @@ def peak_rss_mb(pids: list[int]) -> float:
         with open(f"/proc/{pid}/status") as f:
             kb += next(int(line.split()[1]) for line in f if line.startswith("VmHWM:"))
     return kb / 1024.0
+
+
+def cpu_steal_s() -> float:
+    """CPU time the hypervisor gave to other guests, summed over cores."""
+    with open("/proc/stat") as f:
+        fields = f.readline().split()
+    return int(fields[8]) / os.sysconf("SC_CLK_TCK")
 
 
 def foreign_jvms() -> int:
@@ -175,6 +183,7 @@ def main(argv=None) -> int:
         return 2
 
     env = {"load_avg_start": os.getloadavg()[0], "foreign_jvms_at_start": foreign_jvms()}
+    steal0 = cpu_steal_s()
     cores = len(os.sched_getaffinity(0))
     work = os.path.abspath(os.path.join(".bench_work", f"{args.workload}-{os.getpid()}"))
     shutil.rmtree(work, ignore_errors=True)
@@ -192,6 +201,7 @@ def main(argv=None) -> int:
             os.rmdir(".bench_work")
         except OSError:
             pass
+    env["cpu_steal_s"] = cpu_steal_s() - steal0
     print(json.dumps({"env": env}))
     print(json.dumps(result))
     return 0
@@ -231,7 +241,7 @@ def run(args, work, engine, env, tracing, workloads) -> dict:
     if tracer:
         tracer.enabled = True
     t_wall0, t0 = time.time(), time.perf_counter()
-    while not ops or (
+    while len(ops) < wl.min_ops or (
         time.perf_counter() - t0 < min(args.seconds, MAX_MEASURE_S) and not wl.exhausted
     ):
         ops.append(wl.run_op())
@@ -257,7 +267,10 @@ def run(args, work, engine, env, tracing, workloads) -> dict:
             "setup_s": (statistics.median(setups), "s"),
             "peak_rss_mb": (peak_rss_mb([os.getpid(), engine.jvm_pid()]), "MB"),
             "op_p50_s": (statistics.median(op.latency_s for op in ops), "s"),
-            "rows_per_s": (sum(op.rows for op in ops) / measure_s, "rows/s"),
+            "rows_per_s": (
+                statistics.median(op.rows / op.latency_s for op in ops),
+                "rows/s",
+            ),
         }
     else:
         app_id = spark.sparkContext.applicationId

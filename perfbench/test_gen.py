@@ -18,6 +18,9 @@ sys.path.insert(0, os.path.dirname(HERE))
 
 import gen  # noqa: E402
 import workloads  # noqa: E402
+from churn_model_evaluation_platform_spark.operators.drift import (  # noqa: E402
+    WINDOWED_MAX_DISTINCT,
+)
 
 
 def _digest(root: str) -> dict[str, str]:
@@ -53,10 +56,13 @@ def test_same_seed_same_bytes_other_seed_other_bytes(name, tmp_path):
     assert all(a[k] != c[k] for k in a)
 
 
-def test_continuous_batches_cross_the_drift_router_threshold():
-    cols = gen.churn_rows(np.random.default_rng(1), 300_000, continuous=True)
+def test_large_batch_columns_stay_on_the_windowed_drift_path():
+    n = workloads.LargeBatch.BATCH_ROWS
+    cols = gen.churn_rows(np.random.default_rng(1), n, continuous=True)
     for c in ("seconds_of_use", "customer_value"):
-        assert len(np.unique(cols[c])) > 280_000
+        assert 0.95 * n < len(np.unique(cols[c])) <= n
+        # Pooled with the reference, with room for the estimate's error.
+        assert (n + workloads.LargeBatch.REF_ROWS) * 1.15 < WINDOWED_MAX_DISTINCT
     for c in gen.FEATURES:
         if c not in ("seconds_of_use", "customer_value"):
             assert len(np.unique(cols[c])) < 1000

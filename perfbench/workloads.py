@@ -86,6 +86,12 @@ def _stored_runs(store: str) -> list[dict[str, float]]:
 class Workload:
     name = ""
     per_layer_default: str | None = None  # layer charged for unlabelled jobs
+    # Operations still get faster for a few after the warm-up. If the
+    # host's speed decided how many are measured, the median would sit
+    # at a different point of that curve from run to run, so each
+    # workload measures at least as many as outlast ``--seconds`` on a
+    # 4-core host.
+    min_ops = 1
 
     def __init__(self, work: str, seed: int):
         self.work = work
@@ -134,6 +140,7 @@ class DropStream(Workload):
 
     name = "drop_stream"
     per_layer_default = "monitor"
+    min_ops = 3
     DROP_ROWS = 2000
     REF_ROWS = 2000
     N_DROPS = 24
@@ -315,13 +322,14 @@ class DropStream(Workload):
 
 class LargeBatch(Workload):
     """Batch monitoring of a large CSV file: read and validate → prepare →
-    score → monitoring run → predictions CSV → metrics append. Two
-    columns are continuous with more distinct values than the drift
-    router's threshold, so they take the prefix-sum path."""
+    score → monitoring run → predictions CSV → metrics append. The two
+    continuous columns are near-unique, so each column's windowed KS
+    sorts about ``BATCH_ROWS`` distinct values on one reducer."""
 
     name = "large_batch"
-    BATCH_ROWS = 300_000
+    BATCH_ROWS = 200_000
     REF_ROWS = 2000
+    min_ops = 2
 
     def generate(self) -> None:
         rng = self.rng(2)
@@ -330,6 +338,7 @@ class LargeBatch(Workload):
         # Drifted, so the drift predicate fires at scale.
         self.batch = gen.churn_rows(rng, self.BATCH_ROWS, drifted=True, continuous=True)
         gen.write_churn_csv(self.batch, self.path("batch.csv"))
+        self.next_op = 0
 
     def prepare(self, spark, rep: int) -> None:
         self.spark = spark
@@ -341,8 +350,9 @@ class LargeBatch(Workload):
         self.reference.count()
 
     def run_op(self) -> Op:
-        self.exhausted = True  # one batch outlasts a run's measuring time
-        self.alerts.current = 0
+        i = self.next_op
+        self.next_op += 1
+        self.alerts.current = i
         t0 = time.perf_counter()
         read = csv_source.read_validated_csv(
             self.spark, self.path("batch.csv"), gen.FEATURES, RAW_CHURN_SCHEMA
@@ -353,10 +363,19 @@ class LargeBatch(Workload):
         res = pipeline.monitoring_run(
             scored, self.reference, gen.FEATURES, alert_sink=self.alerts
         )
-        csv_source.write_csv(scored, self.path("predictions"))
+        csv_source.write_csv(scored, self.path(f"predictions_{i}"))
         metrics.append_metrics(res.metrics, self.store)
+        # monitoring_run hands back its metrics cached. Release them, as
+        # the scored batch: the next run over the same file has the same
+        # plan and would otherwise be served this run's cached rows.
+        res.metrics.unpersist()
         scored.unpersist()
-        return Op(time.perf_counter() - t0, self.BATCH_ROWS, 0)
+        return Op(time.perf_counter() - t0, self.BATCH_ROWS, i)
+
+    def warm_up(self) -> list[Op]:
+        # The first run in a JVM pays about as much again for planning,
+        # code generation and JIT compilation; the second still ~20% more.
+        return [self.run_op(), self.run_op()]
 
     def check(self, ops: list[Op]) -> None:
         runs = _stored_runs(self.store)
@@ -367,7 +386,7 @@ class LargeBatch(Workload):
         ref = {c: self.ref[c] for c in gen.FEATURES}
         for op, stored in zip(ops, runs):
             cur = self.batch
-            parts = sorted(glob.glob(self.path("predictions", "part-*.csv")))
+            parts = sorted(glob.glob(self.path(f"predictions_{op.index}", "part-*.csv")))
             back = pa.concat_tables(
                 [
                     pacsv.read_csv(
@@ -414,6 +433,7 @@ class DashboardReads(Workload):
     render."""
 
     name = "dashboard_reads"
+    min_ops = 2
     HISTORY_RUNS = 1000
     NEW_RUNS = 64
 
